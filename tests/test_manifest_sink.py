@@ -120,15 +120,26 @@ def test_orphan_files_invisible(spark, table):
 def test_schema_evolution_harmonized_read(spark, table):
     """Snapshots may evolve schemas: a column added in v2 reads as NULL
     for v1 rows in the harmonized union; each version alone still reads
-    with exactly its own schema; manifests record the per-version DDL."""
+    with exactly its own schema; manifests record the per-version DDL,
+    and a version's files read back with exactly that recorded schema."""
     v1 = spark.range(0, 5).selectExpr("id", "id * 2 AS v")
-    v2 = spark.range(5, 8).selectExpr("id", "id * 2 AS v", "'b' AS batch_tag")
+    v2 = spark.range(5, 8).selectExpr(
+        "id", "id * 2 AS v", "'b' AS batch_tag", "CAST(id AS DECIMAL(18,2)) AS amt"
+    )
     table.publish(v1, snapshot_id="old-schema")
     table.publish(v2, snapshot_id="new-schema")
 
     assert "batch_tag" not in table.read(spark, version=1).columns
     assert "batch_tag" in table.read(spark, version=2).columns
     assert "batch_tag" in table.snapshot(2).schema_ddl
+    # a field name simpleString() leaves unquoted (unparseable DDL)
+    # still reads back with the recorded schema, via file inference
+    odd = ManifestTable(table.table_dir + "_odd")
+    odd.publish(spark.range(3).selectExpr("id AS `sum(id)`"), snapshot_id="odd")
+    for snap in (table.snapshot(1), table.snapshot(2), odd.snapshot(1)):
+        back = ManifestTable._read_files(spark, snap.files, snap.schema_ddl)
+        assert back.schema.simpleString() == snap.schema_ddl
+    assert table.snapshot(2).schema_ddl == v2.schema.simpleString()
 
     h = table.read_history_harmonized(spark)
     rows = {(r.id): (r.batch_tag, r._version) for r in h.collect()}

@@ -588,11 +588,13 @@ def test_quality_filter_restart_never_double_counts(spark, tmp_path_factory):
     delivered batch (must no-op via the idempotent snapshot id — a
     double-ADD of verdict counters would be silent data corruption),
     restart from the checkpoint, and the final counter table must equal
-    the one-shot batch aggregate over the whole corpus."""
+    the one-shot batch aggregate over the whole corpus. Streams through
+    the sink's own per-row projection and ``_add_counters`` merge."""
     from pyspark.sql import functions as SF
 
     from tinymapreduce_spark.operators.textstats import gopher_rules_df
     from tinymapreduce_spark.sources.manifest_sink import ManifestTable
+    from tinymapreduce_spark.streaming.sinks import _add_counters, _quality_rows
 
     base = str(tmp_path_factory.mktemp("qf_restart"))
     src, ckpt = os.path.join(base, "feed"), os.path.join(base, "ckpt")
@@ -613,33 +615,17 @@ def test_quality_filter_restart_never_double_counts(spark, tmp_path_factory):
 
     table = ManifestTable(os.path.join(base, "table"))
 
-    def merge_batch(batch_df, batch_id):
-        s = batch_df.sparkSession
-        part = (
-            gopher_rules_df(batch_df, passthrough=("lang",))
-            .groupBy("lang", "passes")
-            .agg(
-                SF.count(SF.lit(1)).alias("n_docs"),
-                SF.sum("n_words").cast("long").alias("n_words"),
-            )
-        )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("lang", "passes")
-                .agg(
-                    SF.sum("n_docs").alias("n_docs"),
-                    SF.sum("n_words").cast("long").alias("n_words"),
-                )
-            )
-        table.publish(part, snapshot_id=f"batch-{batch_id}")
+    def merge_batch(rows, batch_id):
+        _add_counters(table, rows, ["lang", "passes"], ["n_docs", "n_words"], batch_id)
 
     def start():
-        return (
+        feed = (
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
+        )
+        return (
+            _quality_rows(feed)
             .writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", ckpt)
             .start()
@@ -654,7 +640,7 @@ def test_quality_filter_restart_never_double_counts(spark, tmp_path_factory):
 
     # crash-replay of the last delivered batch: counters must NOT re-add
     last_batch = spark.read.parquet(os.path.join(src, "f2.parquet"))
-    merge_batch(last_batch, 1)
+    merge_batch(_quality_rows(last_batch), 1)
     assert table.current_version() == v_after_kill, "replay must no-op"
 
     write_feed("f3", 2)
@@ -687,7 +673,8 @@ def test_decontaminate_restart_never_double_counts(spark, tmp_path_factory):
     kill mid-feed, crash-replay the last delivered batch (idempotent
     snapshot id must no-op — a double-ADD would inflate contamination
     counts), restart, and the final table must equal the one-shot batch
-    contamination aggregate."""
+    contamination aggregate. Merges through the sink's own per-batch
+    contributions and ``_add_counters``."""
     from pyspark.sql import functions as SF
 
     from tinymapreduce_spark.functions.text import tokens
@@ -697,6 +684,7 @@ def test_decontaminate_restart_never_double_counts(spark, tmp_path_factory):
         contamination_check,
     )
     from tinymapreduce_spark.sources.manifest_sink import ManifestTable
+    from tinymapreduce_spark.streaming.sinks import _add_counters, _contamination_rows
 
     base = str(tmp_path_factory.mktemp("decon_restart"))
     src, ckpt = os.path.join(base, "feed"), os.path.join(base, "ckpt")
@@ -725,35 +713,13 @@ def test_decontaminate_restart_never_double_counts(spark, tmp_path_factory):
     table = ManifestTable(os.path.join(base, "table"))
 
     def merge_batch(batch_df, batch_id):
-        s = batch_df.sparkSession
-        b = batch_df.select("doc_id", "source", tokens("text").alias("toks"))
-        contaminated = (
-            _grams(b)
-            .join(SF.broadcast(eval_grams), "gram", "left_semi")
-            .select("doc_id")
-            .distinct()
-            .withColumn("hit", SF.lit(1))
+        _add_counters(
+            table,
+            _contamination_rows(batch_df, eval_grams),
+            ["source"],
+            ["n_train_docs", "n_contaminated"],
+            batch_id,
         )
-        part = (
-            b.select("doc_id", "source")
-            .join(contaminated, "doc_id", "left")
-            .groupBy("source")
-            .agg(
-                SF.count(SF.lit(1)).alias("n_train_docs"),
-                SF.count("hit").alias("n_contaminated"),
-            )
-        )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("source")
-                .agg(
-                    SF.sum("n_train_docs").alias("n_train_docs"),
-                    SF.sum("n_contaminated").alias("n_contaminated"),
-                )
-            )
-        table.publish(part, snapshot_id=f"batch-{batch_id}")
 
     def start():
         return (

@@ -1346,8 +1346,8 @@ def content_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection, chunking, and the rollup (CONTENT_CHUNK_SQL).
 
     Scale shape: boundary hashing is one codegen projection over the
-    pre-split char-code array (no Python); the per-doc LEAD window
-    shuffles on doc_id (parallel across docs); chunk identity
+    pre-split char-code array (no Python), and each boundary pairs
+    with the next inside the row (no per-doc window); chunk identity
     aggregates shuffle (source, md5) rows — never text. At 100 TB the
     chunk-hash aggregate is the classic storage-dedup shape: the
     shuffle carries 16-byte digests, and hot chunks (boilerplate)
@@ -1385,14 +1385,14 @@ def content_chunks_df(docs: DataFrame) -> DataFrame:
     codes_col = F.transform(
         F.filter(F.split(F.col("text"), ""), lambda c: c != F.lit("")), F.ascii
     )
-    # Keyed repartition at the session's parallelism: the exchange both
+    # Keyed repartition at the session's parallelism: the exchange
     # spreads the rolling-hash projection below across the cluster
     # (otherwise it fuses onto a possibly single-task scan — and the
     # shuffled bytes are small relative to the per-row CPU, so an
-    # AQE-coalescible keyless form would collapse it back to one task)
-    # and pre-satisfies the per-doc window's distribution. The explicit
-    # count tracks the cluster's cores instead of the previous hard 64,
-    # a local-mode constant that micro-batch plans paid in full.
+    # AQE-coalescible keyless form would collapse it back to one task).
+    # The explicit count tracks the cluster's cores instead of the
+    # previous hard 64, a local-mode constant that micro-batch plans
+    # paid in full.
     par = docs.sparkSession.sparkContext.defaultParallelism
     base = docs.repartition(par, "doc_id").select(
         "doc_id", "source", "text", codes_col.alias("codes")
@@ -1412,20 +1412,19 @@ def content_chunks_df(docs: DataFrame) -> DataFrame:
         F.array(F.lit(1)),
         F.filter(positions, lambda p: kgram_hash(p) % CHUNK_D == 0),
     )
-    starts = base.select(
-        "doc_id", "source", "text", F.posexplode(bounds).alias("i", "start")
-    )
-    w = Window.partitionBy("doc_id").orderBy("i")
-    return (
-        starts.withColumn("nxt", F.lead("start").over(w))
-        .withColumn("len_t", F.length("text"))
-        .select(
-            "doc_id",
-            "source",
-            F.expr(
-                "substring(text, start, coalesce(nxt, len_t + 1) - start)"
-            ).alias("chunk"),
-        )
+    # Each chunk runs from its boundary to the next one (the last to
+    # the end of the text), paired row-locally — no per-doc window, so
+    # the whole chunking is a stateless projection that also runs on a
+    # streaming frame (streaming/sinks.py::stream_chunk_ingest).
+    starts = base.select("doc_id", "source", "text", bounds.alias("b"))
+    b = F.col("b")
+    ends = F.concat(F.slice(b, 2, F.size(b) - 1), F.array(F.length("text") + 1))
+    return starts.select(
+        "doc_id",
+        "source",
+        F.explode(
+            F.zip_with(b, ends, lambda s, e: F.col("text").substr(s, e - s))
+        ).alias("chunk"),
     )
 
 

@@ -707,6 +707,20 @@ def _probe_blooms_distributed(
     return {r["_file"] for r in hit_rows}
 
 
+def _staged_files(staging: str) -> list[str]:
+    """The parquet data files a write left in ``staging``, sorted."""
+    return sorted(
+        os.path.join(staging, f) for f in os.listdir(staging) if f.endswith(".parquet")
+    )
+
+
+def _footer_rows(files: list[str]) -> int:
+    """Row count of ``files`` from their parquet footers, driver-side."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
 def _footer_file_stats(files: list[str], stats_cols: list[str]) -> dict | None:
     """Per-file (rows, min/max) stats read from the parquet FOOTERS,
     driver-side — no Spark job (guide §1.2: the per-publish stats pass
@@ -877,25 +891,25 @@ class ManifestTable:
         spark = df.sparkSession
         staging = os.path.join(self.data_dir, f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}")
         df.write.mode("errorifexists").parquet(staging)
+        files = _staged_files(staging)
+
+        def staged() -> DataFrame:
+            # The staged re-read takes the frame's own schema: inferring
+            # it from the files costs a whole Spark job per publish, and
+            # the files were just written from exactly that schema. Built
+            # only when a stats pass or an audit reads it.
+            return spark.read.schema(df.schema).parquet(staging)
 
         try:
-            staged = spark.read.parquet(staging)
             stats = None
             if stats_cols or bloom_cols:
                 if not bloom_cols:
                     # driver-side footer fast path (exact for plain
                     # int/float columns; None -> Spark pass below)
-                    stats = _footer_file_stats(
-                        sorted(
-                            os.path.join(staging, f)
-                            for f in os.listdir(staging)
-                            if f.endswith(".parquet")
-                        ),
-                        stats_cols or [],
-                    )
+                    stats = _footer_file_stats(files, stats_cols or [])
                 if stats is None:
                     stats = self._collect_file_stats(
-                        staged, stats_cols or [], bloom_cols, bloom_m
+                        staged(), stats_cols or [], bloom_cols, bloom_m
                     )
                 n_rows = sum(s["rows"] for s in stats.values())
             else:
@@ -907,30 +921,19 @@ class ManifestTable:
                 # tiny frames every trigger, so the saved job is a
                 # material slice of each trigger's fixed cost
                 # (stream_decontaminate warm lap, BASELINE.md round 8).
-                import pyarrow.parquet as pq
-
-                n_rows = sum(
-                    pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-                    for f in os.listdir(staging)
-                    if f.endswith(".parquet")
-                )
-            problems = audit(staged) if audit else None
+                n_rows = _footer_rows(files)
+            problems = audit(staged()) if audit else None
             if problems:
                 raise AuditError(problems)
         except Exception:
             shutil.rmtree(staging, ignore_errors=True)
             raise
 
-        files = sorted(
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        )
         try:
             committed = self._commit(
                 files,
                 n_rows,
-                staged.schema.simpleString(),
+                df.schema.simpleString(),
                 snapshot_id,
                 stats,
                 base_version=base_version,
@@ -1219,9 +1222,24 @@ class ManifestTable:
 
     @staticmethod
     def _read_files(spark: SparkSession, files: list[str], schema_ddl: str) -> DataFrame:
+        """Read ``files`` with the schema their manifest records — every
+        version's files were written from exactly that schema, so
+        re-inferring it (a Spark job per read) is pure overhead."""
+        from pyspark.errors import ParseException
+        from pyspark.sql.types import DataType
+
+        try:
+            schema = DataType.fromDDL(schema_ddl)
+        except ParseException:
+            # simpleString() does not quote field names, so a column
+            # named like `sum(x)` records a DDL that cannot parse back:
+            # infer from the files (same frame, one extra job)
+            if not files:
+                raise
+            return spark.read.parquet(*files)
         if not files:  # an empty publish commits a manifest with no files
-            return spark.createDataFrame([], schema_ddl)
-        return spark.read.parquet(*files)
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*files)
 
     def _read_snapshot(
         self, spark: SparkSession, snap: Snapshot, files: list[str] | None = None
@@ -1457,26 +1475,27 @@ class ManifestTable:
         spark = df.sparkSession
         staging = os.path.join(self.data_dir, f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}")
         df.write.mode("errorifexists").parquet(staging)
+        new_files = _staged_files(staging)
         try:
-            staged = spark.read.parquet(staging)
             new_stats = (
-                self._collect_file_stats(staged, stats_cols or [], bloom_cols, bloom_m)
+                self._collect_file_stats(
+                    spark.read.schema(df.schema).parquet(staging),
+                    stats_cols or [],
+                    bloom_cols,
+                    bloom_m,
+                )
                 if (stats_cols or bloom_cols)
                 else None
             )
+            # footer row counts, as in publish(): no count() job per append
             n_new = (
                 sum(s["rows"] for s in new_stats.values())
                 if new_stats is not None
-                else staged.count()
+                else _footer_rows(new_files)
             )
         except Exception:
             shutil.rmtree(staging, ignore_errors=True)
             raise
-        new_files = sorted(
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        )
         with self._commit_lock():
             if self._find_snapshot_id(snapshot_id) is not None:
                 shutil.rmtree(staging, ignore_errors=True)
@@ -1490,7 +1509,7 @@ class ManifestTable:
             return self._write_manifest_locked(
                 (prev.files if prev else []) + new_files,
                 (prev.n_rows if prev else 0) + n_new,
-                staged.schema.simpleString(),
+                df.schema.simpleString(),
                 snapshot_id,
                 stats,
                 # appended files have no deleted positions; previous
@@ -1912,11 +1931,7 @@ class ManifestTable:
             rewritten.repartitionByRange(n_out, key_col).write.mode(
                 "errorifexists"
             ).parquet(staging)
-            new_files = sorted(
-                os.path.join(staging, f)
-                for f in os.listdir(staging)
-                if f.endswith(".parquet")
-            )
+            new_files = _staged_files(staging)
             stat_cols = (
                 list(next(iter(stats.values()))["min"]) if stats else [key_col]
             )
@@ -1937,9 +1952,11 @@ class ManifestTable:
                     if restats is None:
                         # one stats pass + one stacked bloom pass over the
                         # rewritten files, regardless of bloom column count
-                        staged_read = spark.read.parquet(*new_files)
                         restats = self._collect_file_stats(
-                            staged_read, stat_cols, sorted(bloom_m_of), bloom_m_of
+                            self._read_files(spark, new_files, snap.schema_ddl),
+                            stat_cols,
+                            sorted(bloom_m_of),
+                            bloom_m_of,
                         )
                 else:
                     restats = {}
@@ -2095,13 +2112,7 @@ class ManifestTable:
             # written-DV count from the parquet footers (what was
             # actually written), driver-side — same authority as a
             # count() job without paying one per micro-batch
-            import pyarrow.parquet as pq
-
-            n_del = sum(
-                pq.ParquetFile(os.path.join(dv_dir, f)).metadata.num_rows
-                for f in os.listdir(dv_dir)
-                if f.endswith(".parquet")
-            )
+            n_del = _footer_rows(_staged_files(dv_dir))
             if n_del == 0:
                 shutil.rmtree(dv_dir, ignore_errors=True)
                 return cur

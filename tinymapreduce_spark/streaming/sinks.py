@@ -14,6 +14,11 @@ story (temp-file + rename per reduce task,
 ``/root/reference/src/mr/worker.go:160-184``) lifted to a versioned
 multi-file table.
 
+Additive counter sinks (cms, ann, chunk, quality, perplexity,
+decontamination) share one kernel: ``_stream_counters`` writes and
+streams the feed, and ``_add_counters`` folds each micro-batch's
+per-row contributions into the table in one exchange.
+
 Result materialization: each query here returns a ``_materialize``-d
 frame and then deletes the run-scoped backing table directory. The
 default path is ``localCheckpoint(eager=True)`` — lineage truncation
@@ -30,7 +35,9 @@ and covered by tests/test_streaming_recovery.py.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,7 +72,6 @@ def _materialize(df: DataFrame) -> DataFrame:
                 # data stranded by previous processes (checkpoint blocks
                 # are never deleted by Spark itself).
                 default_dir = os.path.join(SCRATCH, "reliable_ckpt")
-                import shutil
                 import warnings
 
                 warnings.warn(
@@ -80,6 +86,90 @@ def _materialize(df: DataFrame) -> DataFrame:
                 sc.setCheckpointDir(default_dir)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def _add_counters(
+    table: ManifestTable,
+    rows: DataFrame,
+    keys: list[str],
+    sums: list[str],
+    batch_id: int,
+) -> int:
+    """Add one micro-batch's per-row counter contributions (``keys`` +
+    ``sums`` columns, e.g. ``(lang, passes, 1, n_words)`` per document)
+    into ``table`` and publish the result as ``batch-{batch_id}``.
+
+    One exchange: the current version (one row per key) is unioned with
+    the raw per-row contributions and a single ``groupBy(keys).sum()``
+    folds both — partial aggregation runs on each union side before the
+    one shuffle, so the batch is never pre-aggregated through an
+    exchange of its own. AQE coalesces the O(|keys|) merge output, so
+    each version lands as one parquet file, not one near-empty file per
+    shuffle partition that every later batch would re-scan (checked at
+    local[4] and local[32]).
+
+    Exactly-once: the publish is keyed by the batch id, so a replayed
+    batch recomputes the merge against whatever is current and then
+    hits the idempotent no-op publish — counters can never double-add.
+    Because counter addition is exact and associative, the final table
+    equals the one-shot batch aggregate however the feed was split."""
+    rows = rows.select(*keys, *sums)
+    if table.current_version() is not None:
+        rows = table.read(rows.sparkSession).unionByName(rows)
+    merged = rows.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sums])
+    return table.publish(merged, snapshot_id=f"batch-{batch_id}")
+
+
+def _stream_counters(
+    spark: SparkSession,
+    name: str,
+    feed: DataFrame,
+    rows: Callable[[DataFrame], DataFrame],
+    keys: list[str],
+    sums: list[str],
+    result: Callable[[DataFrame], DataFrame] = lambda table: table,
+    per_batch: bool = False,
+) -> DataFrame:
+    """The counter-sink kernel: write ``feed`` as 8 parquet files,
+    stream them 2 per trigger (4 micro-batches, so the merge path
+    really runs), ``_add_counters`` every batch's ``rows`` into a
+    run-scoped table, and return ``result`` of the final table,
+    materialized before the scratch dirs are removed.
+
+    ``rows`` maps feed rows to per-row contributions. A stateless
+    projection is built ONCE on the streaming frame: rebuilding its
+    expressions in every batch is driver time per trigger. With
+    ``per_batch`` it runs inside each micro-batch instead — for
+    contributions that need a per-document aggregate, which a
+    stateless stream cannot run."""
+    run = uuid.uuid4().hex[:8]
+    src = os.path.join(SCRATCH, f"{name}_stream_src_{run}")
+    table = ManifestTable(os.path.join(SCRATCH, f"{name}_stream_{run}"))
+    try:
+        feed.repartition(8).write.mode("overwrite").parquet(src)
+        # the schema of the frame just written: inferring it back from
+        # the files would cost a Spark job
+        stream = (
+            spark.readStream.schema(feed.schema)
+            .option("maxFilesPerTrigger", "2")
+            .parquet(src)
+        )
+        if not per_batch:
+            stream = rows(stream)
+
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            batch_rows = rows(batch_df) if per_batch else batch_df
+            _add_counters(table, batch_rows, keys, sums, batch_id)
+
+        q = stream.writeStream.foreachBatch(merge_batch).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return result(table.read(spark)).transform(_materialize)
+    finally:
+        shutil.rmtree(table.table_dir, ignore_errors=True)
+        shutil.rmtree(src, ignore_errors=True)
 
 
 def stream_wap_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,8 +204,6 @@ def stream_wap_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize, then drop the run-scoped table dir (fresh per run —
     # batch ids restart per query, so it can never be reused anyway)
     out = table.read(spark).transform(_materialize)
-    import shutil
-
     shutil.rmtree(table.table_dir, ignore_errors=True)
     return out
 
@@ -133,86 +221,53 @@ def stream_cms_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/sketches.cms_heavy_hitters``: the corpus arrives as
     micro-batches (the single-file testdata is pre-split into 8 parquet
     files, streamed 2 per trigger, so the merge path really runs), each
-    batch's (row, bucket) cell counts are ADDED into the versioned
-    sketch table (read current + union + re-sum + publish), and the
-    final table is queried batch-side for the top-k heavy hitters.
+    batch's (row, bucket) cell hits are ADDED into the versioned sketch
+    table (``_add_counters``: current cells + batch hits, one
+    exchange), and the final table is queried batch-side for the top-k
+    heavy hitters.
 
-    Exactly-once: the read-modify-write publishes under snapshot_id =
-    batch id — a replayed batch recomputes the merge against whatever
-    is current, then hits the idempotent no-op publish, so counts can
-    never double-add. Because cell addition is exact and associative,
-    the final cell table equals the one-shot batch sketch bit-for-bit —
+    Exactly-once: the merge publishes under snapshot_id = batch id — a
+    replayed batch recomputes the merge against whatever is current,
+    then hits the idempotent no-op publish, so counts can never
+    double-add. Because cell addition is exact and associative, the
+    final cell table equals the one-shot batch sketch bit-for-bit —
     the query output shares CMS_SQL with the batch operator, and the
-    driver hash-checks it.
+    oracle parity check hash-compares it.
 
-    At 100 TB this is the production sketch story: per-batch partial
-    cell tables are a few KB regardless of batch size; history gives
-    time-travel over sketch states; rollups union cell tables.
+    At 100 TB this is the production sketch story: the cell table is a
+    few KB regardless of batch size; history gives time-travel over
+    sketch states; rollups union cell tables.
     """
     from tinymapreduce_spark.functions.text import tokens
-    from tinymapreduce_spark.operators.sketches import (
-        CMS_TOPK,
-        _cms_cells,
-    )
+    from tinymapreduce_spark.operators.sketches import CMS_TOPK, _cms_cells
     from tinymapreduce_spark.sources.loaders import load_table
 
     # RAW table for the feed write (the tokenize + sketch fold runs on
-    # the BATCH reads): the spread-for-CPU view would just move the
+    # the streamed rows): the spread-for-CPU view would just move the
     # text through a second exchange before the repartition(8) one.
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"cms_stream_src_{run}")
-    docs.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    table = ManifestTable(os.path.join(SCRATCH, f"cms_stream_{run}"))
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        cells = (
-            batch_df.select(F.explode(tokens("text")).alias("token"))
+    def cell_hits(feed: DataFrame) -> DataFrame:
+        return (
+            feed.select(F.explode(tokens("text")).alias("token"))
             .select(F.explode(_cms_cells(F.col("token"))).alias("c"))
-            .groupBy(F.col("c.r").alias("r"), F.col("c.b").alias("b"))
-            .agg(F.count(F.lit(1)).alias("cell_n"))
+            .select("c.r", "c.b", F.lit(1).alias("cell_n"))
         )
-        if table.current_version() is not None:
-            cells = (
-                table.read(s)
-                .unionByName(cells)
-                .groupBy("r", "b")
-                .agg(F.sum("cell_n").alias("cell_n"))
-            )
-        table.publish(cells, snapshot_id=f"batch-{batch_id}")
 
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    def top_k(cells: DataFrame) -> DataFrame:
+        cand = docs.select(F.explode(tokens("text")).alias("token")).distinct()
+        est = (
+            cand.select("token", F.explode(_cms_cells(F.col("token"))).alias("c"))
+            .select("token", F.col("c.r").alias("r"), F.col("c.b").alias("b"))
+            .join(F.broadcast(cells), ["r", "b"])
+            .groupBy("token")
+            .agg(F.min("cell_n").alias("est_count"))
+        )
+        return est.orderBy(F.desc("est_count"), F.asc("token")).limit(CMS_TOPK)
 
-    cells = table.read(spark)
-    cand = docs.select(F.explode(tokens("text")).alias("token")).distinct()
-    est = (
-        cand.select("token", F.explode(_cms_cells(F.col("token"))).alias("c"))
-        .select("token", F.col("c.r").alias("r"), F.col("c.b").alias("b"))
-        .join(F.broadcast(cells), ["r", "b"])
-        .groupBy("token")
-        .agg(F.min("cell_n").alias("est_count"))
+    return _stream_counters(
+        spark, "cms", docs, cell_hits, ["r", "b"], ["cell_n"], result=top_k
     )
-    out = (
-        est.orderBy(F.desc("est_count"), F.asc("token"))
-        .limit(CMS_TOPK)
-        .transform(_materialize)
-    )
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
 
 
 def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,10 +281,6 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     addition-order-exact and oracle-checkable. At scale this is how a
     production pipeline exports throughput/quality counters to its
     metrics bus for free."""
-    import uuid as _uuid
-
-    from tinymapreduce_spark.sources.loaders import normalize_event_ts
-
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
         events_stream_source(spark, sf_dir, schema)
@@ -243,7 +294,7 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # a real (tiny) downstream computation so the observe node has a consumer
     agg = observed.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    name = f"stream_obs_{_uuid.uuid4().hex[:8]}"
+    name = f"stream_obs_{uuid.uuid4().hex[:8]}"
     q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
     try:
         q.processAllAvailable()
@@ -534,8 +585,6 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before deleting the run-scoped scratch dirs below
         .transform(_materialize)
     )
-    import shutil
-
     shutil.rmtree(table.table_dir, ignore_errors=True)
     shutil.rmtree(feed_dir, ignore_errors=True)
     return out
@@ -623,8 +672,6 @@ def stream_cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before deleting the run-scoped scratch dirs below
         .transform(_materialize)
     )
-    import shutil
-
     shutil.rmtree(table.table_dir, ignore_errors=True)
     shutil.rmtree(feed_dir, ignore_errors=True)
     return out
@@ -638,19 +685,17 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     store), then vectors arrive as micro-batches (the embeddings table
     pre-split into 8 parquet files, streamed 2 per trigger) and each
     batch's nearest-centroid assignments are ADDED into a versioned
-    per-cell postings-stats table (read current + union + re-sum +
-    publish). The query returns the final per-cell row counts and
-    vec_id checksums.
+    per-cell postings-stats table (``_add_counters``). The query
+    returns the final per-cell row counts and vec_id checksums.
 
-    Exactly-once: the read-modify-write publishes under snapshot_id =
-    batch id, so a replayed batch recomputes against whatever is
-    current and then hits the idempotent no-op publish — counts can
-    never double-add. Because the codebook is frozen and per-cell
-    addition is exact and associative, the final table equals the
-    one-shot batch assignment bit-for-bit: the oracle replays the
-    integer-Lloyd's training and full-corpus assignment in SQL
-    (STREAM_ANN_INGEST_SQL shares the IVF oracle's CTEs) and the
-    driver hash-checks it.
+    Exactly-once: the merge publishes under snapshot_id = batch id, so
+    a replayed batch recomputes against whatever is current and then
+    hits the idempotent no-op publish — counts can never double-add.
+    Because the codebook is frozen and per-cell addition is exact and
+    associative, the final table equals the one-shot batch assignment
+    bit-for-bit: the oracle replays the integer-Lloyd's training and
+    full-corpus assignment in SQL (STREAM_ANN_INGEST_SQL shares the IVF
+    oracle's CTEs) and the oracle parity check hash-compares it.
 
     At 100 TB this is how a vector index actually grows: assignment is
     a narrow map per batch (one broadcast centroid row, no shuffle),
@@ -668,63 +713,14 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not cents:
         return spark.createDataFrame([], "cid int, n_vecs long, id_sum long")
 
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"ann_stream_src_{run}")
-    emb.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    table = ManifestTable(os.path.join(SCRATCH, f"ann_stream_{run}"))
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        part = (
-            _with_cell_dists(batch_df, cents)
-            .select("vec_id", _nearest_cid().alias("cid"))
-            .groupBy("cid")
-            .agg(
-                F.count(F.lit(1)).alias("n_vecs"),
-                F.sum("vec_id").alias("id_sum"),
-            )
+    def assign(feed: DataFrame) -> DataFrame:
+        return _with_cell_dists(feed, cents).select(
+            _nearest_cid().alias("cid"),
+            F.lit(1).alias("n_vecs"),
+            F.col("vec_id").alias("id_sum"),
         )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("cid")
-                .agg(
-                    F.sum("n_vecs").alias("n_vecs"),
-                    F.sum("id_sum").alias("id_sum"),
-                )
-            )
-        # The stats table is O(NLIST) rows BY CONSTRUCTION (cid is the
-        # grouping key of a bounded codebook), yet the aggregate leaves
-        # it spread over every shuffle partition — each version was
-        # published as 32 near-empty parquet files, and every later
-        # batch's read-modify-write paid a 32-task scan + 32-file
-        # footer pass for <= NLIST rows (phase_profile r11: one 32-task
-        # 0.26 s job per micro-batch was exactly this write). coalesce
-        # narrows only this final O(NLIST) write; the assignment scan
-        # and the aggregation stay parallel (guide §6 small files).
-        table.publish(part.coalesce(1), snapshot_id=f"batch-{batch_id}")
 
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = table.read(spark).select(
-        "cid", "n_vecs", "id_sum"
-    ).transform(_materialize)
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
+    return _stream_counters(spark, "ann", emb, assign, ["cid"], ["n_vecs", "id_sum"])
 
 
 def _stream_ann_ingest_sql() -> str:
@@ -756,13 +752,13 @@ def stream_chunk_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches (the corpus pre-split into 8 parquet files, streamed
     2 per trigger), each batch is content-defined-chunked and its
     (source, chunk-md5, length) counts are ADDED into a versioned
-    chunk-identity table (read current + union + re-sum + publish
-    under idempotent batch-id snapshot ids). The query folds the final
-    table into the same per-source dedup-ratio rollup as the batch
-    operator — and because chunk boundaries depend only on document
-    CONTENT (never on batch composition) and count addition is exact
-    and associative, the end state equals the one-shot batch chunking
-    bit-for-bit: the oracle is CONTENT_CHUNK_SQL, shared verbatim.
+    chunk-identity table (``_add_counters``, idempotent batch-id
+    snapshot ids). The query folds the final table into the same
+    per-source dedup-ratio rollup as the batch operator — and because
+    chunk boundaries depend only on document CONTENT (never on batch
+    composition) and count addition is exact and associative, the end
+    state equals the one-shot batch chunking bit-for-bit: the oracle is
+    CONTENT_CHUNK_SQL, shared verbatim.
 
     This is the storage-dedup ingest loop at 100 TB: the chunk-identity
     table grows with UNIQUE content only (16-byte digests + counts,
@@ -775,67 +771,38 @@ def stream_chunk_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8-file source materialization, whose repartition is already an
     # exchange — routing it through the spread-for-CPU view would move
     # the full text payload through a second, useless exchange (the
-    # CPU-heavy chunking runs on the BATCH reads, not here).
+    # CPU-heavy chunking runs on the streamed rows, not here).
     docs = (
         load_table(spark, sf_dir, "documents")
         .where(F.length("text") > 0)
         .select("doc_id", "source", "text")
     )
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"chunk_stream_src_{run}")
-    docs.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    table = ManifestTable(os.path.join(SCRATCH, f"chunk_stream_{run}"))
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        part = (
-            content_chunks_df(batch_df)
-            .select(
-                "source", F.md5("chunk").alias("h"), F.length("chunk").alias("clen")
+    def chunk_hits(feed: DataFrame) -> DataFrame:
+        return content_chunks_df(feed).select(
+            "source",
+            F.md5("chunk").alias("h"),
+            F.length("chunk").alias("clen"),
+            F.lit(1).alias("cnt"),
+        )
+
+    def rollup(chunks: DataFrame) -> DataFrame:
+        return (
+            chunks.groupBy("source")
+            .agg(
+                F.sum("cnt").alias("n_chunks"),
+                F.count(F.lit(1)).alias("n_unique_chunks"),
+                F.sum(F.col("cnt") * F.col("clen")).alias("chars_total"),
+                F.sum("clen").alias("chars_unique"),
             )
-            .groupBy("source", "h", "clen")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("source", "h", "clen")
-                .agg(F.sum("cnt").alias("cnt"))
+            .withColumn(
+                "dedup_ratio", F.round(F.col("chars_unique") / F.col("chars_total"), 6)
             )
-        table.publish(part, snapshot_id=f"batch-{batch_id}")
-
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = (
-        table.read(spark)
-        .groupBy("source")
-        .agg(
-            F.sum("cnt").alias("n_chunks"),
-            F.count(F.lit(1)).alias("n_unique_chunks"),
-            F.sum(F.col("cnt") * F.col("clen")).alias("chars_total"),
-            F.sum("clen").alias("chars_unique"),
         )
-        .withColumn(
-            "dedup_ratio", F.round(F.col("chars_unique") / F.col("chars_total"), 6)
-        )
-        .transform(_materialize)
+
+    return _stream_counters(
+        spark, "chunk", docs, chunk_hits, ["source", "h", "clen"], ["cnt"], result=rollup
     )
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
 
 
 def stream_dv_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -905,8 +872,6 @@ def stream_dv_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .transform(_materialize)
     )
-    import shutil
-
     shutil.rmtree(table.table_dir, ignore_errors=True)
     shutil.rmtree(feed_dir, ignore_errors=True)
     return out
@@ -921,76 +886,44 @@ GROUP BY o_orderstatus
 """
 
 
+def _quality_rows(docs: DataFrame) -> DataFrame:
+    """Per-document ``(lang, passes, n_docs=1, n_words)`` contributions
+    of the shared rule battery — a stateless projection, so it builds
+    once on the streaming frame."""
+    from tinymapreduce_spark.operators.textstats import gopher_rules_df
+
+    return gopher_rules_df(docs, passthrough=("lang",)).select(
+        "lang", "passes", F.lit(1).alias("n_docs"), "n_words"
+    )
+
+
 def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming document-quality filtering — the incremental form of
     ``operators/textstats.gopher_rules``: the corpus arrives as
     micro-batches (pre-split into 8 parquet files, 2 per trigger), each
-    batch runs the SAME Catalyst rule battery (shared
-    ``gopher_rules_df`` expressions) and its per-(lang, verdict)
-    accept/reject counters are ADDED into the versioned table
-    (read current + union + re-sum + publish). The final table equals
-    the one-shot batch aggregate exactly, because counter addition is
-    associative — the shared-SQL oracle the driver hash-checks.
+    document runs the SAME Catalyst rule battery (shared
+    ``gopher_rules_df`` expressions, built once on the stream) and its
+    per-(lang, verdict) accept/reject counters are ADDED into the
+    versioned table (``_add_counters``: one exchange per batch). The
+    final table equals the one-shot batch aggregate exactly, because
+    counter addition is associative — the shared-SQL oracle the parity
+    check hash-compares.
 
-    Exactly-once: the read-modify-write publishes under snapshot_id =
-    batch id, so a replayed batch recomputes the merge against whatever
-    is current and then hits the idempotent no-op publish — counts can
-    never double-add. At 100 TB this is the live curation dashboard:
-    per-batch verdict partials are O(|langs| x 2) rows regardless of
-    batch size, and table history time-travels the acceptance rate."""
-    from tinymapreduce_spark.operators.textstats import gopher_rules_df
+    Exactly-once: the merge publishes under snapshot_id = batch id, so
+    a replayed batch recomputes the merge against whatever is current
+    and then hits the idempotent no-op publish — counts can never
+    double-add. At 100 TB this is the live curation dashboard: the
+    counter table is O(|langs| x 2) rows regardless of batch size, and
+    table history time-travels the acceptance rate."""
     from tinymapreduce_spark.sources.loaders import load_table
 
     # RAW table for the feed write (not the spread-for-CPU view): the
-    # rule battery runs on the BATCH reads inside foreachBatch; here
-    # the text would just pay a second full exchange before the
-    # repartition(8) one.
+    # rule battery runs on the streamed rows; here the text would just
+    # pay a second full exchange before the repartition(8) one.
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"quality_stream_src_{run}")
-    docs.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
+    return _stream_counters(
+        spark, "quality", docs, _quality_rows, ["lang", "passes"], ["n_docs", "n_words"]
     )
-    table = ManifestTable(os.path.join(SCRATCH, f"quality_stream_{run}"))
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        part = (
-            gopher_rules_df(batch_df, passthrough=("lang",))
-            .groupBy("lang", "passes")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_words").cast("long").alias("n_words"),
-            )
-        )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("lang", "passes")
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("n_words").cast("long").alias("n_words"),
-                )
-            )
-        table.publish(part, snapshot_id=f"batch-{batch_id}")
-
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = table.read(spark).transform(_materialize)
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
 
 
 def _stream_quality_sql() -> str:
@@ -1014,15 +947,16 @@ def stream_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-side over the full corpus (CCNet trains offline, scores the
     crawl as it arrives), frozen via eager localCheckpoint, and every
     micro-batch scores its documents against the static model
-    (stream-static joins inside foreachBatch), labels them
+    (stream-static joins inside foreachBatch — scoring aggregates per
+    document, so it cannot run on the stateless stream), labels them
     head/middle/tail, and ADDs its per-(lang, bucket) counters into the
-    versioned table under idempotent batch-id publishes. Because the
-    frozen model is exactly the batch query's model, the final counter
-    table equals the batch bucketing aggregated — the shared-SQL oracle
-    the driver hash-checks.
+    versioned table under idempotent batch-id publishes
+    (``_add_counters``). Because the frozen model is exactly the batch
+    query's model, the final counter table equals the batch bucketing
+    aggregated — the shared-SQL oracle the parity check hash-compares.
 
-    At 100 TB: the LM is vocab^2-bounded and broadcast once; per-batch
-    partials are O(|lang| x 3) rows regardless of batch bytes; table
+    At 100 TB: the LM is vocab^2-bounded and broadcast once; the counter
+    table is O(|lang| x 3) rows regardless of batch bytes; table
     history time-travels the corpus quality mix as the crawl grows."""
     from tinymapreduce_spark.operators.textstats import (
         pplx_bigrams_df,
@@ -1031,7 +965,7 @@ def stream_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         pplx_model_df,
         pplx_score_df,
     )
-    from tinymapreduce_spark.sources.loaders import documents_for_cpu
+    from tinymapreduce_spark.sources.loaders import documents_for_cpu, load_table
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id", "text", "lang")
     # Materialize the bigram pass ONCE: both the LM build and the
@@ -1045,58 +979,24 @@ def stream_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts = starts.transform(_materialize)
     cuts = pplx_cuts_df(pplx_score_df(bg_full, lm, starts)).transform(_materialize)
 
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"pplx_stream_src_{run}")
+    def bucket_hits(batch: DataFrame) -> DataFrame:
+        labeled = pplx_label_df(pplx_score_df(pplx_bigrams_df(batch), lm, starts), cuts)
+        return labeled.select("lang", "bucket", F.lit(1).alias("n_docs"), "n_bigrams")
+
     # Feed write from the RAW table: `docs` (the spread view) is the
     # right input for the CPU-heavy model training above, but routing
     # the feed write through it would pay the spread exchange a second
     # time just to re-exchange into 8 files.
-    from tinymapreduce_spark.sources.loaders import load_table
-
-    load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang"
-    ).repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
+    feed = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    return _stream_counters(
+        spark,
+        "pplx",
+        feed,
+        bucket_hits,
+        ["lang", "bucket"],
+        ["n_docs", "n_bigrams"],
+        per_batch=True,
     )
-    table = ManifestTable(os.path.join(SCRATCH, f"pplx_stream_{run}"))
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        labeled = pplx_label_df(
-            pplx_score_df(pplx_bigrams_df(batch_df), lm, starts), cuts
-        )
-        part = labeled.groupBy("lang", "bucket").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_bigrams").cast("long").alias("n_bigrams"),
-        )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("lang", "bucket")
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("n_bigrams").cast("long").alias("n_bigrams"),
-                )
-            )
-        table.publish(part, snapshot_id=f"batch-{batch_id}")
-
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = table.read(spark).transform(_materialize)
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
 
 
 def _stream_pplx_sql() -> str:
@@ -1112,6 +1012,33 @@ FROM ({PERPLEXITY_BUCKETS_SQL}) GROUP BY 1, 2
 STREAM_PPLX_SQL = _stream_pplx_sql()
 
 
+def _contamination_rows(batch: DataFrame, eval_grams: DataFrame) -> DataFrame:
+    """Per-document ``(source, n_train_docs=1, n_contaminated=0|1)``
+    contributions: a doc is contaminated when any of its grams is in
+    the static ``eval_grams`` set. The per-doc distinct is an aggregate,
+    so this runs inside each micro-batch, not on the stream."""
+    from tinymapreduce_spark.functions.text import tokens
+    from tinymapreduce_spark.operators.curation import _grams
+
+    b = batch.select("doc_id", "source", tokens("text").alias("toks"))
+    contaminated = (
+        _grams(b)
+        .join(F.broadcast(eval_grams), "gram", "left_semi")
+        .select("doc_id")
+        .distinct()
+        .withColumn("hit", F.lit(1))
+    )
+    return (
+        b.select("doc_id", "source")
+        .join(contaminated, "doc_id", "left")
+        .select(
+            "source",
+            F.lit(1).alias("n_train_docs"),
+            F.coalesce("hit", F.lit(0)).alias("n_contaminated"),
+        )
+    )
+
+
 def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming benchmark decontamination — the incremental form of
     ``operators/curation.contamination_check``: the eval slice's
@@ -1120,21 +1047,21 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     training corpus arrives as micro-batches (8 parquet files, 2 per
     trigger); each batch left-semi joins its grams against the static
     eval set and ADDS its per-source (n_train_docs, n_contaminated)
-    partials into the versioned table. Because every training doc
-    arrives in exactly one batch and contamination is a per-doc
-    predicate against a STATIC set, per-batch partials sum to exactly
-    the one-shot batch aggregate — the shared oracle the driver
-    hash-checks.
+    counts into the versioned table (``_add_counters``). Because every
+    training doc arrives in exactly one batch and contamination is a
+    per-doc predicate against a STATIC set, per-batch contributions sum
+    to exactly the one-shot batch aggregate — the shared oracle the
+    parity check hash-compares.
 
-    Exactly-once: read-modify-write published under snapshot_id =
-    batch id (idempotent replay), as every sink in this module. At
-    100 TB this is live leak monitoring for a training-data intake:
-    the eval-gram set stays a broadcast-sized invariant, each batch's
-    cost is one tokenize + one semi-join, and table history
-    time-travels the contamination rate as the crawl streams in."""
+    Exactly-once: the merge publishes under snapshot_id = batch id
+    (idempotent replay), as every sink in this module. At 100 TB this
+    is live leak monitoring for a training-data intake: the eval-gram
+    set stays a broadcast-sized invariant, each batch's cost is one
+    tokenize + one semi-join, and table history time-travels the
+    contamination rate as the crawl streams in."""
     from tinymapreduce_spark.functions.text import tokens
     from tinymapreduce_spark.operators.curation import EVAL_MOD, _grams
-    from tinymapreduce_spark.sources.loaders import documents_for_cpu
+    from tinymapreduce_spark.sources.loaders import documents_for_cpu, load_table
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id", "source", "text")
     tokked = docs.select("doc_id", "source", tokens("text").alias("toks"))
@@ -1144,67 +1071,20 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .transform(_materialize)
     )
-
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"decontam_stream_src_{run}")
     # Feed write from the RAW table: `docs` (the spread view) is the
     # right input for the eval-gram tokenize above, but the feed write
     # needs no CPU spread — only the 8-file exchange.
-    from tinymapreduce_spark.sources.loaders import load_table
-
-    load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
-    ).where(F.col("doc_id") % EVAL_MOD != 0).repartition(8).write.mode(
-        "overwrite"
-    ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
+    feed = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "source", "text")
+        .where(F.col("doc_id") % EVAL_MOD != 0)
     )
-    table = ManifestTable(os.path.join(SCRATCH, f"decontam_stream_{run}"))
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        b = batch_df.select("doc_id", "source", tokens("text").alias("toks"))
-        contaminated = (
-            _grams(b)
-            .join(F.broadcast(eval_grams), "gram", "left_semi")
-            .select("doc_id")
-            .distinct()
-            .withColumn("hit", F.lit(1))
-        )
-        part = (
-            b.select("doc_id", "source")
-            .join(contaminated, "doc_id", "left")
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).alias("n_train_docs"),
-                F.count("hit").alias("n_contaminated"),
-            )
-        )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("source")
-                .agg(
-                    F.sum("n_train_docs").alias("n_train_docs"),
-                    F.sum("n_contaminated").alias("n_contaminated"),
-                )
-            )
-        table.publish(part, snapshot_id=f"batch-{batch_id}")
-
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = table.read(spark).transform(_materialize)
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
+    return _stream_counters(
+        spark,
+        "decontam",
+        feed,
+        lambda batch: _contamination_rows(batch, eval_grams),
+        ["source"],
+        ["n_train_docs", "n_contaminated"],
+        per_batch=True,
+    )
